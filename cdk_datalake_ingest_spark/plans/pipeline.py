@@ -10,6 +10,7 @@ reference's 3-attempt retry.
 
 from __future__ import annotations
 
+import datetime as dt
 import logging
 import time
 from dataclasses import dataclass, field
@@ -57,12 +58,16 @@ class StagePipeline:
         max_write_attempts: int = 3,
         retry_sleep_base: float = 60.0,
         sort_mode: str = "within-partitions",
+        now: dt.datetime | None = None,
     ):
         """``sort_mode``: 'within-partitions' (default — clusters rows
         for write locality without the global range-shuffle; at 100 TB
         a global sort of the stage table is never affordable),
         'global' (bug-compatible with the reference's write-time
-        ``orderBy``, SJ:464), or 'none'."""
+        ``orderBy``, SJ:464), or 'none'.
+
+        ``now`` fixes the clock the A7 delete-window cutoff is computed
+        from; None (the default) reads the wall clock at each write."""
         self.spark = spark
         self.table = table
         self.columns = sorted(columns, key=lambda c: c.column_id)
@@ -71,6 +76,7 @@ class StagePipeline:
         self.max_write_attempts = max_write_attempts
         self.retry_sleep_base = retry_sleep_base
         self.sort_mode = sort_mode
+        self.now = now
 
     # -- column sets driven by the is_* flags (SJ:390-404) -----------------
     @property
@@ -170,7 +176,9 @@ class StagePipeline:
             mode = "merge"
             if self.table.is_transactional:
                 # A7: transactional lookback delete-window.
-                cutoff = lookback_period_cutoff(self.table.delay_incremental_ini)
+                cutoff = lookback_period_cutoff(
+                    self.table.delay_incremental_ini, now=self.now
+                )
                 delete_pred = F.col("processperiod").cast("int") >= F.lit(cutoff)
                 mode = "delete+merge"
         last_error: Exception | None = None

@@ -19,7 +19,9 @@ Scale notes (100 TB / 1000-executor target):
 from __future__ import annotations
 
 import os
+import re
 
+import pyspark
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -64,8 +66,41 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
-#: Keys in ENGINE_CONF that can be set on a live session.
-_RUNTIME_KEYS = tuple(ENGINE_CONF)
+#: Static conf :func:`get_spark` sets on every master. Static means it is
+#: read once per JVM, so it only takes effect in a JVM that
+#: :func:`get_spark` launches; :func:`apply_runtime_conf` cannot set it.
+#:
+#: The generated-class cache: a small ingest batch (tens of rows) cannot
+#: repay a janino compile, so its compiled stages must survive until the
+#: next batch. One round of the incremental_merge benchmark uses more
+#: classes than Spark's 100 entries hold: ~190 compiles per round at 100,
+#: 10-14 at 512.
+STATIC_CONF: dict[str, str] = {
+    "spark.sql.codegen.cache.maxEntries": "512",
+}
+
+#: Runtime conf for plain-local masters only (:func:`is_plain_local`).
+#:
+#: Partition discovery on the driver: above 32 leaf dirs Spark lists a
+#: path with a Spark job (one task per dir), which on a local master runs
+#: in the same JVM and only adds scheduling to every read of a
+#: partitioned snapshot. ManagedTable is POSIX-only, so local reads list
+#: faster from the driver; cluster masters keep parallel listing.
+LOCAL_CONF: dict[str, str] = {
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
+}
+
+#: ``local``, ``local[N]``, ``local[*]``, ``local[N,F]`` (Spark's
+#: SparkMasterRegex forms for the in-process scheduler); not
+#: ``local-cluster[...]``, whose executors are separate JVMs.
+_PLAIN_LOCAL = re.compile(r"local(\[(\d+|\*)(\s*,\s*\d+)?\])?")
+
+
+def is_plain_local(master: str) -> bool:
+    """True when ``master`` runs every executor slot inside the driver
+    JVM: driver heap is executor heap, local disk is the only disk, and
+    a localCheckpoint block cannot be lost to an executor failure."""
+    return _PLAIN_LOCAL.fullmatch(master.strip()) is not None
 
 
 def ensure_parallelism(df, min_partitions: int | None = None):
@@ -215,9 +250,31 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _driver_memory_preset() -> bool:
+    """True when the deployment already sizes the driver heap: the
+    ``SPARK_DRIVER_MEMORY`` env var, or ``spark.driver.memory`` in
+    spark-defaults.conf (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``).
+    A builder-level ``spark.driver.memory`` would override both."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return True
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__),
+        "conf",
+    )
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            return any(
+                re.split(r"[\s=:]", line.strip(), maxsplit=1)[0]
+                == "spark.driver.memory"
+                for line in f
+            )
+    except OSError:
+        return False
+
+
 def default_driver_memory() -> str | None:
-    """Driver heap for engine-created LOCAL sessions, or None to keep
-    Spark's default.
+    """Driver heap for engine-created LOCAL sessions, or None to leave
+    it to Spark (its 1 GiB default, or the deployment's own setting).
 
     In local mode the driver JVM hosts every executor slot, so the
     1 GiB ``spark.driver.memory`` default means N concurrent tasks
@@ -234,13 +291,17 @@ def default_driver_memory() -> str | None:
     shuffle/agg buffers out of spill), bounded by a quarter of the
     box's RAM, floored at Spark's own 1 GiB default (returning None
     when the formula cannot beat it — tiny boxes keep stock behavior).
-    ``SPARK_GRAFT_DRIVER_MEM`` overrides outright. Cluster
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides outright; a heap the deployment
+    already sets (:func:`_driver_memory_preset`) is kept. Cluster
     deployments are untouched: :func:`get_spark` applies this only to
-    local[*] masters — a real cluster sizes driver/executor memory in
-    spark-submit, where executors do not live in the driver."""
+    plain-local masters (:func:`is_plain_local`) — a real cluster sizes
+    driver/executor memory in spark-submit, where executors do not live
+    in the driver."""
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
+    if _driver_memory_preset():
+        return None
     try:
         with open("/proc/meminfo") as f:
             mem_mb = int(f.readline().split()[1]) // 1024
@@ -283,10 +344,14 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable conf to an existing session.
 
     Used when the caller (e.g. a verification harness) owns the session.
+    The :func:`get_spark`-only defaults are not applied: :data:`LOCAL_CONF`
+    depends on the master the caller chose, and :data:`STATIC_CONF` cannot
+    be set on a live session — the codegen cache size is fixed when the
+    JVM first generates code.
     """
-    for k in _RUNTIME_KEYS:
+    for k, v in ENGINE_CONF.items():
         try:
-            spark.conf.set(k, ENGINE_CONF[k])
+            spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build; the default is acceptable
     return spark
@@ -362,12 +427,13 @@ def get_spark(
         master = os.environ.get(
             "SPARK_GRAFT_MASTER", f"local[{default_parallelism()}]"
         )
+    plain_local = is_plain_local(master)
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in ENGINE_CONF.items():
+    for k, v in {
+        **ENGINE_CONF, **STATIC_CONF, **(LOCAL_CONF if plain_local else {})
+    }.items():
         builder = builder.config(k, v)
-    if master.startswith("local") and "spark.driver.memory" not in (
-        extra_conf or {}
-    ):
+    if plain_local and "spark.driver.memory" not in (extra_conf or {}):
         # local mode: the driver JVM hosts all executor slots — size
         # its heap to the slot count instead of Spark's 1 GiB default
         # (see default_driver_memory; no-op if a JVM already exists,

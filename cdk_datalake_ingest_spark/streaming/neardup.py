@@ -77,6 +77,7 @@ from cdk_datalake_ingest_spark.operators.table import (
     GroupTransaction,
     ManagedTable,
 )
+from cdk_datalake_ingest_spark.session import is_plain_local
 
 #: batch-tag column appended to both sink tables; also their
 #: partition column and the leading merge key
@@ -139,7 +140,18 @@ def ingest_batch(
     kept per the module survivor rule plus their signature relations,
     ready to append to the index tables. ``sig_params`` (shingle_size/
     num_hashes/bands/seed/prime) must match the index's build
-    parameters — they define the probe space.
+    parameters — they define the probe space. Two more keys choose how
+    the shared signature stage is held, not what it computes:
+
+    - ``truncate_plans`` (default False here; :func:`apply_ingest_step`
+      defaults it to True on plain-local masters only): localCheckpoint
+      the banded/sets relations so every downstream plan stays
+      batch-sized. localCheckpoint blocks live on executors and are not
+      replicated, so on a cluster master a lost executor fails the
+      batch; cluster callers keep it False (the persist path).
+    - ``cache`` (default True): persist the shingle stage and, when
+      plans are not truncated, the banded relation; both are consumed
+      several times per batch. False recomputes them per consumer.
 
     The batch is shingled exactly ONCE: all three consumers (the
     within-batch pair join, the index probe, the appended signatures)
@@ -465,8 +477,11 @@ def apply_ingest_step(
         run_key = uuid.uuid4().hex[:16]
     # the LOOP caller rebuilds the whole dedup plan every micro-batch,
     # so the per-batch plan-truncation pays for itself here (and only
-    # here — see ingest_batch's truncate_plans note)
-    sig_params.setdefault("truncate_plans", True)
+    # here — see ingest_batch's truncate_plans note); localCheckpoint
+    # blocks are only safe where no executor can be lost
+    sig_params.setdefault(
+        "truncate_plans", is_plain_local(spark.sparkContext.master)
+    )
     persisted: list[DataFrame] = []
     try:
         not_self = ~(

@@ -11,7 +11,6 @@ all control-plane, no SparkSession needed.
 
 from __future__ import annotations
 
-import tempfile
 
 from cdk_datalake_ingest_spark.plans.planner import (
     Notifier,
@@ -40,8 +39,8 @@ def _catalog() -> ConfigCatalog:
     )
 
 
-def _run(catalog, notifier, runner):
-    log = RunLog(tempfile.mkdtemp(prefix="cdk_notif_") + "/log.jsonl")
+def _run(catalog, notifier, runner, tmp_path):
+    log = RunLog(tmp_path / "log.jsonl")
     planner = RunPlanner(
         catalog, run_log=log, base_sleep=0.0, max_attempts=2,
         notifier=notifier,
@@ -49,7 +48,7 @@ def _run(catalog, notifier, runner):
     return planner.run(runner), log
 
 
-def test_failure_fires_per_table_and_success_is_endpoint_gated():
+def test_failure_fires_per_table_and_success_is_endpoint_gated(tmp_path):
     successes: list[tuple[str, str]] = []
     failures: list[tuple[str, str, str]] = []
     notifier = Notifier(
@@ -61,7 +60,7 @@ def test_failure_fires_per_table_and_success_is_endpoint_gated():
         if t.target_table_name == "t_bad":
             raise RuntimeError("boom")
 
-    results, log = _run(_catalog(), notifier, runner)
+    results, log = _run(_catalog(), notifier, runner, tmp_path)
     assert {r.table: r.status for r in results} == {
         "t_ok_1": "SUCCEEDED",
         "t_ok_2": "SUCCEEDED",
@@ -94,15 +93,15 @@ def test_warning_class_message_dispatch():
     assert "Failed table" not in msg
 
 
-def test_all_endpoints_clean_fires_one_success_each():
+def test_all_endpoints_clean_fires_one_success_each(tmp_path):
     successes: list[str] = []
     notifier = Notifier(on_success=lambda ep, msg: successes.append(ep))
-    results, _ = _run(_catalog(), notifier, lambda t: None)
+    results, _ = _run(_catalog(), notifier, lambda t: None, tmp_path)
     assert all(r.status == "SUCCEEDED" for r in results)
     assert sorted(successes) == ["EP_A", "EP_B"]
 
 
-def test_notifier_exceptions_never_break_the_run():
+def test_notifier_exceptions_never_break_the_run(tmp_path):
     def explode(*a):  # noqa: ANN002
         raise ConnectionError("sns is down")
 
@@ -112,7 +111,7 @@ def test_notifier_exceptions_never_break_the_run():
         if t.target_table_name == "t_bad":
             raise RuntimeError("boom")
 
-    results, log = _run(_catalog(), notifier, runner)
+    results, log = _run(_catalog(), notifier, runner, tmp_path)
     # run completed and statuses are intact despite the notifier dying
     # on both paths (SendSuccededNotification catches and returns
     # FAILED without propagating).
@@ -120,12 +119,12 @@ def test_notifier_exceptions_never_break_the_run():
     assert log.failed_count() == 1
 
 
-def test_no_notifier_is_the_default_and_harmless():
-    results, _ = _run(_catalog(), None, lambda t: None)
+def test_no_notifier_is_the_default_and_harmless(tmp_path):
+    results, _ = _run(_catalog(), None, lambda t: None, tmp_path)
     assert all(r.status == "SUCCEEDED" for r in results)
 
 
-def test_duplicate_table_names_across_endpoints_do_not_mask_failure():
+def test_duplicate_table_names_across_endpoints_do_not_mask_failure(tmp_path):
     # review catch: target_table_name uniqueness is NOT enforced across
     # endpoints; the success gate must key per-spec (zip with results),
     # never per-name, or a later same-named success masks the failure.
@@ -146,11 +145,11 @@ def test_duplicate_table_names_across_endpoints_do_not_mask_failure():
         if t.endpoint == "EP_A":
             raise RuntimeError("boom")
 
-    _run(catalog, notifier, runner)
+    _run(catalog, notifier, runner, tmp_path)
     assert successes == ["EP_B"]  # EP_A must NOT get a success
 
 
-def test_warning_table_does_not_suppress_endpoint_success():
+def test_warning_table_does_not_suppress_endpoint_success(tmp_path):
     """NoDataToMigrateException → STATUS 'WARNING', not 'FAILED'
     (aje-stage-dms-load.py:544-546), and SendSuccededNotification.py
     :26-36 scans STATUS_STAGE='FAILED' only — so an endpoint whose only
@@ -175,7 +174,7 @@ def test_warning_table_does_not_suppress_endpoint_success():
         if t.target_table_name == "t_bad":
             raise NoDataToMigrateException()
 
-    results, log = _run(_catalog(), notifier, runner)
+    results, log = _run(_catalog(), notifier, runner, tmp_path)
     assert {r.table: r.status for r in results}["t_bad"] == "WARNING"
     # BOTH endpoints succeed: EP_B's only problem table is a warning
     assert sorted(successes) == ["EP_A", "EP_B"]
@@ -194,7 +193,7 @@ def test_warning_table_does_not_suppress_endpoint_success():
     assert attempts.count("t_bad") == 1
 
 
-def test_failed_and_warning_mix_still_suppresses_success():
+def test_failed_and_warning_mix_still_suppresses_success(tmp_path):
     # a genuinely FAILED table on the same endpoint as a WARNING table
     # still suppresses the endpoint's success publish
     catalog = ConfigCatalog(
@@ -212,7 +211,7 @@ def test_failed_and_warning_mix_still_suppresses_success():
             raise RuntimeError("no data detected to migrate")
         raise RuntimeError("boom")
 
-    results, log = _run(catalog, notifier, runner)
+    results, log = _run(catalog, notifier, runner, tmp_path)
     assert successes == []
     assert {r.table: r.status for r in results} == {
         "t_warn": "WARNING",
@@ -221,7 +220,7 @@ def test_failed_and_warning_mix_still_suppresses_success():
     assert log.failed_count() == 1
 
 
-def test_flow_not_ready_requeues_without_burning_a_slot_or_retries():
+def test_flow_not_ready_requeues_without_burning_a_slot_or_retries(tmp_path):
     """R4 Map+Wait wiring (r12 verdict task #8): a runner raising
     FlowNotReadyError (the AppFlow CREATING answer) is requeued on the
     wait heap — it must not burn retry attempts, must not be FAILED,
@@ -252,7 +251,7 @@ def test_flow_not_ready_requeues_without_burning_a_slot_or_retries():
                 raise FlowNotReadyError("flow ajedtlk-accounthr CREATING")
 
     successes: list[str] = []
-    log = RunLog(tempfile.mkdtemp(prefix="cdk_flow_") + "/log.jsonl")
+    log = RunLog(tmp_path / "log.jsonl")
     planner = RunPlanner(
         catalog,
         run_log=log,
@@ -276,7 +275,7 @@ def test_flow_not_ready_requeues_without_burning_a_slot_or_retries():
     assert log.failed_count() == 0
 
 
-def test_flow_wait_budget_exhaustion_fails_the_table():
+def test_flow_wait_budget_exhaustion_fails_the_table(tmp_path):
     from cdk_datalake_ingest_spark.plans.planner import (
         FlowNotReadyError,
         Notifier,
@@ -294,7 +293,7 @@ def test_flow_wait_budget_exhaustion_fails_the_table():
 
     failures: list[str] = []
     successes: list[str] = []
-    log = RunLog(tempfile.mkdtemp(prefix="cdk_flowx_") + "/log.jsonl")
+    log = RunLog(tmp_path / "log.jsonl")
     planner = RunPlanner(
         catalog,
         run_log=log,
@@ -314,7 +313,7 @@ def test_flow_wait_budget_exhaustion_fails_the_table():
     assert log.failed_count() == 1
 
 
-def test_retry_budget_carries_across_wait_requeues():
+def test_retry_budget_carries_across_wait_requeues(tmp_path):
     """ADVICE r13: a runner interleaving transient failures with
     not-ready answers must stay bounded by max_attempts TOTAL transient
     failures across all wait cycles — wait requeues must not reset the
@@ -340,7 +339,7 @@ def test_retry_budget_carries_across_wait_requeues():
         calls["notready"] += 1
         raise FlowNotReadyError("CREATING")
 
-    log = RunLog(tempfile.mkdtemp(prefix="cdk_budget_") + "/log.jsonl")
+    log = RunLog(tmp_path / "log.jsonl")
     planner = RunPlanner(
         catalog,
         run_log=log,

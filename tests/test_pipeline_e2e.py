@@ -77,6 +77,11 @@ TABLE = TableSpec(
 )
 
 
+#: the clock the date-window tests run at: the month of RAW_BATCH1's
+#: processperiod 202607
+FIXTURE_NOW = dt.datetime(2026, 7, 15)
+
+
 def _day(n: int) -> dt.date:
     return dt.date(1900, 1, 1) + dt.timedelta(days=n - 693596)
 
@@ -125,7 +130,8 @@ def test_transactional_delete_window(spark, tmp_path):
         source_table_type="t",
         delay_incremental_ini=-2,
     )
-    pipe = StagePipeline(spark, table_t, COLUMNS, strict=True, retry_sleep_base=0.0)
+    pipe = StagePipeline(spark, table_t, COLUMNS, strict=True,
+                         retry_sleep_base=0.0, now=FIXTURE_NOW)
     stage = str(tmp_path / "stage_t")
     pipe.run(spark.createDataFrame(RAW_BATCH1), stage)
     t = ManagedTable(spark, stage)
@@ -140,6 +146,10 @@ def test_transactional_delete_window(spark, tmp_path):
     # (id=2, outside the window) survived and was then updated by the
     # source batch; id=4 inserted.
     assert rows == {2: 202608, 4: 202608}
+
+
+def test_delete_window_ignores_wall_clock(spark, tmp_path, year_later_clock):
+    test_transactional_delete_window(spark, tmp_path)
 
 
 def test_error_isolation_degrades_to_warning(spark):

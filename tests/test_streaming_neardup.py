@@ -10,8 +10,8 @@ these tests cover the semantics the fixture corpus may not exercise.
 
 from __future__ import annotations
 
-import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdk_datalake_ingest_spark.streaming.neardup import (
@@ -95,7 +95,7 @@ def _read_table(spark, path):
     return ManagedTable(spark, path).read()
 
 
-def test_stream_matches_sequential_batches_and_index_grows(spark):
+def test_stream_matches_sequential_batches_and_index_grows(spark, tmp_path):
     rows = [
         (0, _NEAR),      # batch 0 (id%3==0): kept
         (3, _NEAR2),     # batch 0: dominated by 0
@@ -110,7 +110,7 @@ def test_stream_matches_sequential_batches_and_index_grows(spark):
         (8, "more fresh content six seven eight nine ten"),   # kept
     ]
     docs = _docs(spark, rows)
-    tmp = tempfile.mkdtemp(prefix="ndup_t_")
+    tmp = str(tmp_path)
     from cdk_datalake_ingest_spark.queries import _stage_time_ordered_drop
 
     slices = [docs.filter(F.pmod("doc_id", F.lit(3)) == k) for k in range(3)]
@@ -145,11 +145,11 @@ def test_stream_matches_sequential_batches_and_index_grows(spark):
     assert idx_ids == {0, 6, 4, 8}
 
 
-def test_restart_resumes_from_the_index_tables(spark):
+def test_restart_resumes_from_the_index_tables(spark, tmp_path):
     """Kill-and-restart contract: state lives in the tables. A second
     drain over NEW files (fresh checkpoint — the restart-from-tables
     path) must dedup against everything the first drain kept."""
-    tmp = tempfile.mkdtemp(prefix="ndup_r_")
+    tmp = str(tmp_path)
     from cdk_datalake_ingest_spark.queries import _stage_time_ordered_drop
 
     first = _docs(spark, [(10, _NEAR), (11, _OTHER)])
@@ -189,18 +189,17 @@ def _table_fingerprint(spark, path):
     return rows
 
 
-def test_replay_of_a_batch_is_idempotent(spark):
+def test_replay_of_a_batch_is_idempotent(spark, tmp_path):
     """foreachBatch at-least-once contract: re-delivering a completed
     batch (same batch_id, same rows) must leave all three sink tables
     content-identical — zero duplicate survivors, zero duplicate index
     signatures (the r12 verdict's missing #2)."""
-    import tempfile
 
     from cdk_datalake_ingest_spark.streaming.neardup import (
         apply_ingest_step,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ndup_replay_")
+    tmp = str(tmp_path)
     b0 = _docs(spark, [(1, _NEAR), (2, _NEAR2), (9, _OTHER)])
     b1 = _docs(spark, [(11, _NEAR3), (12, "fresh content five six seven")])
     args = (f"{tmp}/kept", f"{tmp}/index")
@@ -225,12 +224,11 @@ def test_replay_of_a_batch_is_idempotent(spark):
     assert kept == {1: 0, 9: 0, 12: 1}
 
 
-def test_replay_after_partial_failure_recovers_survivors(spark):
+def test_replay_after_partial_failure_recovers_survivors(spark, tmp_path):
     """Worst-case crash: the batch's SIGNATURES reached the index but
     its survivors never landed. The replay must still keep the batch's
     documents — the probe excludes the batch's own index rows, so they
     are not dropped as duplicates of themselves (data loss)."""
-    import tempfile
 
     from cdk_datalake_ingest_spark.operators.table import ManagedTable
     from cdk_datalake_ingest_spark.streaming.neardup import (
@@ -238,7 +236,7 @@ def test_replay_after_partial_failure_recovers_survivors(spark):
         ingest_batch,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ndup_partial_")
+    tmp = str(tmp_path)
     args = (f"{tmp}/kept", f"{tmp}/index")
     b0 = _docs(spark, [(1, _NEAR), (9, _OTHER)])
     apply_ingest_step(spark, b0, 0, *args, run_key="rk", cache=False)
@@ -279,15 +277,14 @@ def test_replay_after_partial_failure_recovers_survivors(spark):
     assert n_sig == 8  # one row per band, default bands=8
 
 
-def test_fresh_checkpoint_reingest_converges(spark):
+def test_fresh_checkpoint_reingest_converges(spark, tmp_path):
     """Operator error-recovery case: re-draining the SAME drop with a
     fresh checkpoint (batch ids restart at 0) against the populated
     tables must converge — every already-kept doc matches its own
     prior-run signatures (different run_key) and is dropped; nothing
     duplicates."""
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="ndup_reing_")
+    tmp = str(tmp_path)
     from cdk_datalake_ingest_spark.queries import _stage_time_ordered_drop
 
     docs = _docs(spark, [(10, _NEAR), (11, _OTHER)])
@@ -315,13 +312,12 @@ def test_fresh_checkpoint_reingest_converges(spark):
     assert kept == [10, 11]
 
 
-def test_continuous_mode_returns_live_query_and_ingests(spark):
+def test_continuous_mode_returns_live_query_and_ingests(spark, tmp_path):
     """available_now=False (r13): the continuous crawl shape — the
     call returns the live StreamingQuery, batches keep draining as
     files arrive, and the caller owns the lifecycle."""
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="ndup_cont_")
+    tmp = str(tmp_path)
     from cdk_datalake_ingest_spark.queries import _stage_time_ordered_drop
 
     docs = _docs(spark, [(1, _NEAR), (2, _OTHER)])
@@ -368,14 +364,13 @@ def test_ingest_batch_tracks_persisted_frames_for_public_release(spark):
     )
 
 
-def test_maintain_every_vacuums_between_batches(spark):
+def test_maintain_every_vacuums_between_batches(spark, tmp_path):
     """maintain_every=1 vacuums superseded snapshots after every batch:
     the drain's RESULTS are unchanged and each sink table retains only
     its current snapshot dir (plus the manifest)."""
     import os
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="ndup_maint_")
+    tmp = str(tmp_path)
     from cdk_datalake_ingest_spark.queries import _stage_time_ordered_drop
 
     rows = [(0, _NEAR), (3, _NEAR2), (1, _NEAR3), (4, _OTHER)]
@@ -404,13 +399,12 @@ def test_maintain_every_vacuums_between_batches(spark):
         assert len(vdirs) == 1, (sub, vdirs)
 
 
-def test_first_batch_partial_crash_between_index_merges_recovers(spark):
+def test_first_batch_partial_crash_between_index_merges_recovers(spark, tmp_path):
     """Direct-caller defense (the crash-between-index-merges scenario
     this test originally pinned is structurally impossible since the
     r14 fold + atomic group commit): a hand-seeded index table holding
     batch 0's signatures while the survivors table never landed must
     still replay losslessly via the self-step probe exclusion."""
-    import tempfile
 
     from cdk_datalake_ingest_spark.operators.table import ManagedTable
     from cdk_datalake_ingest_spark.streaming.neardup import (
@@ -419,7 +413,7 @@ def test_first_batch_partial_crash_between_index_merges_recovers(spark):
         ingest_batch,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ndup_fb_")
+    tmp = str(tmp_path)
     b0 = _docs(spark, [(1, _NEAR), (9, _OTHER)])
     bands0, sets0 = _empty_index(spark)
     _, sb, ss = ingest_batch(b0, bands0, sets0, cache=False)
@@ -448,19 +442,18 @@ def test_first_batch_partial_crash_between_index_merges_recovers(spark):
     )
 
 
-def test_checkpoint_path_reuse_mints_fresh_run_key(spark):
+def test_checkpoint_path_reuse_mints_fresh_run_key(spark, tmp_path):
     """Review catch: `rm -rf <ckpt>` then restart at the SAME path must
     not reuse the previous drain's identity — the nonce file lives in
     the checkpoint, so deleting it mints a fresh key and a re-ingest of
     the same docs converges instead of self-excluding."""
     import shutil
-    import tempfile
 
     from cdk_datalake_ingest_spark.streaming.neardup import (
         _checkpoint_run_key,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ndup_ckre_")
+    tmp = str(tmp_path)
     ckpt = f"{tmp}/ckpt"
     k1 = _checkpoint_run_key(ckpt)
     assert _checkpoint_run_key(ckpt) == k1  # restart: stable
@@ -492,12 +485,11 @@ def test_checkpoint_path_reuse_mints_fresh_run_key(spark):
     assert _table_fingerprint(spark, f"{tmp}/kept") == before
 
 
-def test_pre_r13_plain_parquet_index_is_a_loud_error(spark):
+def test_pre_r13_plain_parquet_index_is_a_loud_error(spark, tmp_path):
     """Review catch: a plain-parquet index dir (the r12 sink's appends)
     must raise a migration error, not probe as silently empty — an
     empty probe would discard the accumulated index and re-keep every
     previously-deduped document."""
-    import tempfile
 
     import pytest
 
@@ -505,7 +497,7 @@ def test_pre_r13_plain_parquet_index_is_a_loud_error(spark):
         apply_ingest_step,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ndup_oldfmt_")
+    tmp = str(tmp_path)
     # old-format index dir: raw parquet, no manifest
     _docs(spark, [(5, _NEAR)]).write.parquet(f"{tmp}/index")
     with pytest.raises(ValueError, match="manifest"):
@@ -519,12 +511,11 @@ def test_pre_r13_plain_parquet_index_is_a_loud_error(spark):
         )
 
 
-def test_batch_sinks_commit_atomically(spark, monkeypatch):
+def test_batch_sinks_commit_atomically(spark, monkeypatch, tmp_path):
     """r14: the three sink merges land through ONE GroupTransaction —
     a crash anywhere before the group commit point leaves NO table
     advanced (previously a crash between merges left a partial batch
     only the probe exclusion could recover)."""
-    import tempfile
 
     from cdk_datalake_ingest_spark.operators.table import (
         GroupTransaction,
@@ -534,7 +525,7 @@ def test_batch_sinks_commit_atomically(spark, monkeypatch):
         apply_ingest_step,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ndup_atomic_")
+    tmp = str(tmp_path)
     args = (f"{tmp}/kept", f"{tmp}/index")
     b0 = _docs(spark, [(1, _NEAR), (9, _OTHER)])
     apply_ingest_step(spark, b0, 0, *args, run_key="rk", cache=False)
@@ -587,13 +578,12 @@ def test_object_store_checkpoint_requires_explicit_run_key(spark):
         )
 
 
-def test_explicit_run_key_threads_through_the_stream(spark):
+def test_explicit_run_key_threads_through_the_stream(spark, tmp_path):
     """run_key= passthrough (r14): the drain uses the caller's key as
     the stream identity — index rows carry it, and a restart with the
     SAME key keeps replay identity without any nonce file."""
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="ndup_rk_")
+    tmp = str(tmp_path)
     from cdk_datalake_ingest_spark.queries import _stage_time_ordered_drop
 
     docs = _docs(spark, [(10, _NEAR), (11, _OTHER)])
@@ -621,12 +611,11 @@ def test_explicit_run_key_threads_through_the_stream(spark):
     assert not os.path.exists(f"{tmp}/ckpt/{RUN_KEY_FILE}")
 
 
-def test_r13_split_index_raises_and_migrates(spark):
+def test_r13_split_index_raises_and_migrates(spark, tmp_path):
     """An r13 two-table index passed as index_dir must fail loudly (no
     'kind' column), and migrate_split_index must fold it — preserving
     batch/run_key bookkeeping — so the drain resumes deduping against
     everything previously kept."""
-    import tempfile
 
     import pytest as _pytest
 
@@ -637,7 +626,7 @@ def test_r13_split_index_raises_and_migrates(spark):
         migrate_split_index,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ndup_migr_")
+    tmp = str(tmp_path)
     b0 = _docs(spark, [(10, _NEAR), (11, _OTHER)])
     bands0, sets0 = _empty_index(spark)
     _, sb, ss = ingest_batch(b0, bands0, sets0, cache=False)
@@ -681,3 +670,36 @@ def test_r13_split_index_raises_and_migrates(spark):
         r["doc_id"] for r in _read_table(spark, f"{tmp}/kept").collect()
     )
     assert kept == [10, 11, 21]
+
+
+@pytest.mark.parametrize(
+    "master, default",
+    [("local[4]", True), ("local", True), ("local-cluster[2,1,1024]", False),
+     ("spark://host:7077", False)],
+)
+def test_apply_ingest_step_truncates_plans_only_on_plain_local(
+    spark, tmp_path, monkeypatch, master, default
+):
+    """localCheckpoint blocks are not replicated: a lost executor would
+    fail the batch, so only an in-process master gets plan truncation by
+    default, and an explicit caller choice always wins."""
+    from cdk_datalake_ingest_spark.streaming import neardup
+
+    seen: list[bool] = []
+
+    class _Stop(Exception):
+        pass
+
+    def _record(*args, **kwargs):
+        seen.append(kwargs["truncate_plans"])
+        raise _Stop
+
+    monkeypatch.setattr(neardup, "ingest_batch", _record)
+    monkeypatch.setattr(spark.sparkContext, "master", master)
+    batch = _docs(spark, [(1, _NEAR)])
+    paths = (f"{tmp_path}/kept", f"{tmp_path}/index")
+    for explicit in ({}, {"truncate_plans": not default}):
+        with pytest.raises(_Stop):
+            neardup.apply_ingest_step(spark, batch, 0, *paths, run_key="k",
+                                      **explicit)
+    assert seen == [default, not default]

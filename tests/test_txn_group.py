@@ -11,7 +11,6 @@ mix of old and new across the group.
 from __future__ import annotations
 
 import json
-import tempfile
 from pathlib import Path
 
 import pytest
@@ -28,13 +27,13 @@ def _df(spark, rows, schema="k int, v string"):
     return spark.createDataFrame(rows, schema)
 
 
-def _tables(spark, n=3):
-    tmp = tempfile.mkdtemp(prefix="txn_")
+def _tables(spark, tmp_path, n=3):
+    tmp = str(tmp_path)
     return tmp, [ManagedTable(spark, f"{tmp}/t{i}") for i in range(n)]
 
 
-def test_group_commit_applies_all_tables(spark):
-    tmp, (a, b, c) = _tables(spark)
+def test_group_commit_applies_all_tables(spark, tmp_path):
+    tmp, (a, b, c) = _tables(spark, tmp_path)
     txn = GroupTransaction()
     a.write(_df(spark, [(1, "a")]), txn=txn)
     b.write(_df(spark, [(2, "b")]), txn=txn)
@@ -51,8 +50,8 @@ def test_group_commit_applies_all_tables(spark):
         assert not list(t.path.glob("_txn_group.*"))
 
 
-def test_uncommitted_stage_leaves_tables_unchanged(spark):
-    tmp, (a, b, _) = _tables(spark)
+def test_uncommitted_stage_leaves_tables_unchanged(spark, tmp_path):
+    tmp, (a, b, _) = _tables(spark, tmp_path)
     a.write(_df(spark, [(1, "old")]))
     txn = GroupTransaction()
     a.write(_df(spark, [(1, "new")]), txn=txn)
@@ -64,8 +63,8 @@ def test_uncommitted_stage_leaves_tables_unchanged(spark):
     assert a.vacuum(drop_aborted_after_s=0.0)
 
 
-def test_cas_conflict_aborts_whole_group(spark):
-    tmp, (a, b, _) = _tables(spark)
+def test_cas_conflict_aborts_whole_group(spark, tmp_path):
+    tmp, (a, b, _) = _tables(spark, tmp_path)
     a.write(_df(spark, [(1, "base")]))
     txn = GroupTransaction()
     a.write(_df(spark, [(1, "txn")]), expected_base_version=1, txn=txn)
@@ -81,11 +80,11 @@ def test_cas_conflict_aborts_whole_group(spark):
         assert not (t.path / TXN_PENDING).exists()
 
 
-def test_crash_after_marker_rolls_forward_on_read(spark, monkeypatch):
+def test_crash_after_marker_rolls_forward_on_read(spark, monkeypatch, tmp_path):
     """Crash simulation: the marker (commit point) is written, then the
     process dies before any manifest swap. Every subsequent READ of a
     participant must observe the committed state."""
-    tmp, (a, b, _) = _tables(spark)
+    tmp, (a, b, _) = _tables(spark, tmp_path)
     a.write(_df(spark, [(1, "old")]))
     b.write(_df(spark, [(2, "old")]))
     txn = GroupTransaction()
@@ -108,11 +107,11 @@ def test_crash_after_marker_rolls_forward_on_read(spark, monkeypatch):
     assert not list(Path(tmp, "t0").glob("_txn_group.*"))
 
 
-def test_crash_before_marker_aborts_on_read(spark, monkeypatch):
+def test_crash_before_marker_aborts_on_read(spark, monkeypatch, tmp_path):
     """Crash simulation: prepare records written, process dies before
     the marker. The transaction never decided — reads must keep the old
     state and drop the stale prepare records."""
-    tmp, (a, b, _) = _tables(spark)
+    tmp, (a, b, _) = _tables(spark, tmp_path)
     a.write(_df(spark, [(1, "old")]))
     b.write(_df(spark, [(2, "old")]))
     txn = GroupTransaction()
@@ -136,11 +135,11 @@ def test_crash_before_marker_aborts_on_read(spark, monkeypatch):
         assert not (t.path / TXN_PENDING).exists()
 
 
-def test_crash_mid_swap_is_still_atomic_to_readers(spark, monkeypatch):
+def test_crash_mid_swap_is_still_atomic_to_readers(spark, monkeypatch, tmp_path):
     """Crash between the first and second manifest swap: table a is
     already swapped, b is not. b's next read must roll ITSELF forward —
     the reader can never observe (a=new, b=old)."""
-    tmp, (a, b, _) = _tables(spark)
+    tmp, (a, b, _) = _tables(spark, tmp_path)
     a.write(_df(spark, [(1, "old")]))
     b.write(_df(spark, [(2, "old")]))
     txn = GroupTransaction()
@@ -163,11 +162,11 @@ def test_crash_mid_swap_is_still_atomic_to_readers(spark, monkeypatch):
     assert [r["v"] for r in b.read().collect()] == ["new"]
 
 
-def test_recovery_also_runs_before_new_commits(spark, monkeypatch):
+def test_recovery_also_runs_before_new_commits(spark, monkeypatch, tmp_path):
     """A writer touching a participant of a decided-but-unapplied group
     must roll it forward first — otherwise its own commit would base on
     the stale version and half-undo the transaction."""
-    tmp, (a, b, _) = _tables(spark)
+    tmp, (a, b, _) = _tables(spark, tmp_path)
     a.write(_df(spark, [(1, "old")]))
     b.write(_df(spark, [(2, "old")]))
     txn = GroupTransaction()
@@ -191,16 +190,16 @@ def test_recovery_also_runs_before_new_commits(spark, monkeypatch):
     assert got == {2: "new", 3: "merged"}
 
 
-def test_double_enlist_same_table_rejected(spark):
-    tmp, (a, _, _) = _tables(spark)
+def test_double_enlist_same_table_rejected(spark, tmp_path):
+    tmp, (a, _, _) = _tables(spark, tmp_path)
     txn = GroupTransaction()
     a.write(_df(spark, [(1, "x")]), txn=txn)
     with pytest.raises(ValueError, match="enlisted twice"):
         a.write(_df(spark, [(2, "y")]), txn=txn)
 
 
-def test_commit_twice_rejected(spark):
-    tmp, (a, _, _) = _tables(spark)
+def test_commit_twice_rejected(spark, tmp_path):
+    tmp, (a, _, _) = _tables(spark, tmp_path)
     txn = GroupTransaction()
     a.write(_df(spark, [(1, "x")]), txn=txn)
     txn.commit()
@@ -208,8 +207,8 @@ def test_commit_twice_rejected(spark):
         txn.commit()
 
 
-def test_single_table_group_degenerates_to_plain_commit(spark):
-    tmp, (a, _, _) = _tables(spark)
+def test_single_table_group_degenerates_to_plain_commit(spark, tmp_path):
+    tmp, (a, _, _) = _tables(spark, tmp_path)
     txn = GroupTransaction()
     a.write(_df(spark, [(1, "x")]), txn=txn)
     txn.commit()
@@ -221,18 +220,18 @@ def test_empty_group_commit_is_a_noop(spark):
     GroupTransaction().commit()
 
 
-def test_stale_pointer_with_garbage_json_is_ignored(spark):
+def test_stale_pointer_with_garbage_json_is_ignored(spark, tmp_path):
     """A torn/corrupt prepare record must not brick the table."""
-    tmp, (a, _, _) = _tables(spark)
+    tmp, (a, _, _) = _tables(spark, tmp_path)
     a.write(_df(spark, [(1, "x")]))
     (a.path / TXN_PENDING).write_text("{not json")
     assert [r["v"] for r in a.read().collect()] == ["x"]
 
 
-def test_partition_scoped_merge_stages_through_txn(spark):
+def test_partition_scoped_merge_stages_through_txn(spark, tmp_path):
     """The streaming sinks' exact shape: batch-partitioned tables,
     pby ⊆ keys scoped merges with hints, enlisted in one group."""
-    tmp, (a, b, _) = _tables(spark)
+    tmp, (a, b, _) = _tables(spark, tmp_path)
     import pyspark.sql.functions as F
 
     base = _df(spark, [(1, "x")]).withColumn("p", F.lit(0))

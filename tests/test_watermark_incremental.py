@@ -94,6 +94,12 @@ def test_lookback_period_cutoff():
     assert lookback_period_cutoff(-2, now=NOW) == 202606
 
 
+def test_date_windows_ignore_wall_clock(year_later_clock):
+    test_clamp_future()
+    test_get_limits_aje_encodings()
+    test_lookback_period_cutoff()
+
+
 def test_between_filter_and_expression(spark):
     df = spark.createDataFrame(
         [Row(a=5, b=1), Row(a=15, b=2), Row(a=None, b=3), Row(a=25, b=4)]
